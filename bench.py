@@ -148,61 +148,32 @@ def main() -> None:
                for name, ts in samples.items() if ts}
     spreads = {name: round(max(ts), 3)
                for name, ts in samples.items() if ts}
-    # ANN index amortization (r4 verdict gap #4): build the SRP index
-    # ONCE, then serve the same query batch the sim_topk_ann_srp
-    # headliner recomputes per call. Reported separately from the
-    # headline total; compare ann_index["serve_min"] against
-    # queries["sim_topk_ann_srp"] for the per-batch amortized gain.
-    ann: dict[str, float] = {}
-    try:
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        from python_etl_rest_api_spark.operators import ann_index
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        aq = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-        path = tempfile.mkdtemp(prefix="bench_annidx_")
-        t0 = time.perf_counter()
-        ann_index.build_ann_index(emb, path, dim=64, kinds=("srp",), bits=6)
-        ann["build"] = round(time.perf_counter() - t0, 3)
-        serves = []
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            ann_index.topk_ann_srp_indexed(emb, aq, path, k=10) \
-                .write.format("noop").mode("overwrite").save()
-            serves.append(time.perf_counter() - t0)
-        ann["serve_min"] = round(min(serves), 3)
-        ann["serve_max"] = round(max(serves), 3)
-    except Exception as exc:  # noqa: BLE001 - diagnostics must not fail bench
-        ann["err"] = f"{type(exc).__name__}: {exc}"[:200]
-
-    # Build-vs-serve splits for the two remaining first-use-amortized
-    # paths (r12 verdict #3), reported the same way as ann_index and
-    # NEVER touching the headline numbers above:
-    # - bucketed layout: the one-time bucketBy write the
-    #   layout_bucketed_join serve path amortizes (reset + fresh build
-    #   timed; the headline entry number IS the serve).
-    # - minhash shingle cache: the cached (id, shingles, sh_hash)
-    #   materialization every dedup_minhash_lsh invocation pays
-    #   (build), vs the band+verify pipeline served from a warm cache
-    #   (serve) - the headline number includes BOTH every rep (each
-    #   invocation releases and rebuilds its cache; nothing is
-    #   amortized across reps there), so build+serve here decompose it.
+    # Build-vs-serve split of every build-once artifact (artifacts.py),
+    # reported apart from the headline total: reset the kind, run its
+    # serving entry once cold (the store times the build), then REPS
+    # warm serves. minhash_shingles decomposes the per-call shingle
+    # cache every dedup_minhash_lsh invocation pays (build) from the
+    # band+verify pipeline served from a warm cache (serve); the
+    # headline number includes both on every rep.
+    from python_etl_rest_api_spark import artifacts
     amortized: dict[str, dict] = {}
-    try:
-        from python_etl_rest_api_spark import catalog_warehouse as cw
-        cw.reset_bucketed_layout(spark, SF_DIR)
-        t0 = time.perf_counter()
-        cw.ensure_bucketed_layout(spark, SF_DIR)
-        amortized["bucketed_layout"] = {
-            "build": round(time.perf_counter() - t0, 3),
-            "serve_min": timings.get("layout_bucketed_join"),
-        }
-    except Exception as exc:  # noqa: BLE001
-        amortized["bucketed_layout"] = {
-            "err": f"{type(exc).__name__}: {exc}"[:200]}
+    for kind, entry in artifacts.KINDS.items():
+        try:
+            artifacts.reset(kind, SF_DIR)
+            fn = registry.QUERIES[entry]
+            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            serves = []
+            for _ in range(REPS):
+                t0 = time.perf_counter()
+                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+                serves.append(time.perf_counter() - t0)
+            amortized[kind] = {
+                "build": round(artifacts.build_seconds(kind, SF_DIR), 3),
+                "serve_min": round(min(serves), 3),
+                "serve_max": round(max(serves), 3),
+            }
+        except Exception as exc:  # noqa: BLE001 - diagnostics only
+            amortized[kind] = {"err": f"{type(exc).__name__}: {exc}"[:200]}
     try:
         from python_etl_rest_api_spark import opcache
         from python_etl_rest_api_spark.operators import dedup as dd
@@ -251,7 +222,6 @@ def main() -> None:
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        "ann_index": ann,
         "amortized": amortized,
     }
     if errs:

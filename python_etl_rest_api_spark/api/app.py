@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..operators.analytics import daily_company_totals
 from ..operators.clean import build_dim_fact, clean_pipeline
 from ..operators.first100 import First100, ValidationError
+from ..operators.load import atomic_overwrite
 from ..sources.csv_source import read_charges_csv
 
 MAX_PAGE = 10_000
@@ -228,6 +229,28 @@ def next_cursor(columns, page, limit: int):
     return [None if last[c] is None else str(last[c]) for c in columns]
 
 
+def run_etl(spark, csv_path: str, out_dir: str) -> dict:
+    """Body of ``POST /etl/run``: read the dirty CSV, split clean and
+    critical tiers, derive dim/fact, and atomically overwrite all four
+    under ``out_dir``. The clean tier is cached for its count and three
+    writes, and unpersisted on the way out so a long-lived server holds
+    no frame per call."""
+    raw = read_charges_csv(spark, csv_path)
+    clean, critical = clean_pipeline(raw)
+    clean = clean.cache()
+    try:
+        companies, charges = build_dim_fact(clean)
+        counts = {"original": raw.count(), "clean": clean.count(),
+                  "critical": critical.count()}
+        atomic_overwrite(clean, os.path.join(out_dir, "clean"))
+        atomic_overwrite(critical, os.path.join(out_dir, "critical"))
+        atomic_overwrite(companies, os.path.join(out_dir, "companies"))
+        atomic_overwrite(charges, os.path.join(out_dir, "charges"))
+    finally:
+        clean.unpersist()
+    return {"counts": counts, "out_dir": out_dir}
+
+
 def build_app(spark=None, state_path: str | None = None,
               data_root: str | None = None):
     """``data_root`` confines every client-supplied filesystem path
@@ -294,18 +317,7 @@ def build_app(spark=None, state_path: str | None = None,
         out_dir = _confined(out_dir)
         if not os.path.exists(csv_path):
             raise HTTPException(status_code=404, detail=f"no such file: {csv_path}")
-        raw = read_charges_csv(spark, csv_path)
-        clean, critical = clean_pipeline(raw)
-        clean = clean.cache()
-        companies, charges = build_dim_fact(clean)
-        counts = {"original": raw.count(), "clean": clean.count(),
-                  "critical": critical.count()}
-        from ..operators.load import atomic_overwrite
-        atomic_overwrite(clean, os.path.join(out_dir, "clean"))
-        atomic_overwrite(critical, os.path.join(out_dir, "critical"))
-        atomic_overwrite(companies, os.path.join(out_dir, "companies"))
-        atomic_overwrite(charges, os.path.join(out_dir, "charges"))
-        return {"counts": counts, "out_dir": out_dir}
+        return run_etl(spark, csv_path, out_dir)
 
     @app.get("/view/daily_company_totals")
     def view_daily(warehouse_dir: str, date: str | None = None,

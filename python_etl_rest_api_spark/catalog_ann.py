@@ -3,33 +3,25 @@ corpus serves all four entries, each checked against the SAME DuckDB
 oracle as its recompute twin (sim_topk_ann_{srp,ivf,pq,ivfpq}) - the
 strongest possible proof that index-path == recompute-path, since the
 driver value-hashes both against one SQL definition. Build-vs-serve
-amortization is measured in bench.py's ann-index section.
+amortization is measured in bench.py's amortized block.
 
-The build is cached per sf_dir for the process lifetime (a dict of
-scratch paths): the four serve entries share one
-``build_ann_index(..., kinds=ALL_KINDS)`` call, so a verification sweep
-pays the corpus-sized build cost ONCE (~6 s at sf0.1) and each entry
-verifies at serve cost (~1 s) - exactly how a production deployment
-amortizes an index, and the difference between these entries costing
-4 builds or 1 in a time-budgeted driver window. Sharing is safe because
-every family's geometry is an independent deterministic function of the
-meta parameters (seeded hyperplanes / seed centroids with
-refine_steps=0 / seeded codebooks): building srp+ivf+pq together is
-bit-identical to three solo builds.
+The four entries share one ``build_ann_index(..., kinds=ALL_KINDS)``
+build per corpus, held in the build-once store (artifacts.py). Sharing
+is safe because every family's geometry is an independent deterministic
+function of the meta parameters (seeded hyperplanes / seed centroids
+with refine_steps=0 / seeded codebooks): building srp+ivf+pq together
+is bit-identical to three solo builds.
 """
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
+from . import artifacts
 from . import catalog_pipe  # noqa: F401 - registers the PQ oracle first
 from .catalog import ORACLES, _t, query
 from .catalog_ext import _IVF_ORACLE_SQL, _SRP_ORACLE_SQL
 from .operators import ann_index
-
-_INDEX_CACHE: dict[str, str] = {}
 
 
 def _emb_and_queries(spark, sf_dir):
@@ -40,17 +32,13 @@ def _emb_and_queries(spark, sf_dir):
 
 
 def _shared_index(spark, sf_dir):
-    """Build (once per process per corpus) the full-family index all
-    four serve entries read. Parameters match the recompute entries so
-    the shared oracles stay exact."""
-    if sf_dir not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="annidx_shared_")
-        ann_index.build_ann_index(
+    """The full-family index all four serve entries read. Parameters
+    match the recompute entries so the shared oracles stay exact."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return artifacts.build_once(
+        "ann_index", sf_dir, lambda path: ann_index.build_ann_index(
             emb, path, dim=64, kinds=ann_index.ALL_KINDS, bits=6,
-            n_centroids=16, refine_steps=0, m_sub=4, n_codewords=16)
-        _INDEX_CACHE[sf_dir] = path
-    return _INDEX_CACHE[sf_dir]
+            n_centroids=16, refine_steps=0, m_sub=4, n_codewords=16))
 
 
 @query("sim_ann_index_srp_serve", _SRP_ORACLE_SQL)

@@ -1189,17 +1189,6 @@ def multimodal_avi_frames(spark, sf_dir):
 # Bench headliners (TPC-H-shaped, exercising scan+agg and join+agg paths)
 # ---------------------------------------------------------------------
 
-# q1's integer-cents limb width: per-row integer units split into
-# (value div 2^20, value % 2^20) and summed as TWO plain longs, so the
-# whole hot path is primitive codegen arithmetic. |lo| < 2^20 and
-# hi <= value/2^20 bound BOTH partial sums by ~count * 2^20, so the
-# long accumulators are exact up to ~8e12 rows PER GROUP (~1.3 PB of
-# lineitem) - far past any per-group cardinality a 100 TB run sees;
-# the recombine hi*2^20 + lo runs in decimal(38,0) on the one final
-# row per group, where overflow is impossible and cost is nil.
-_Q1_LIMB = 1 << 20
-
-
 @query("q1_pricing_summary", f"""
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE)
@@ -1234,8 +1223,9 @@ def q1_pricing_summary(spark, sf_dir):
     on the Spark side, round(x*100) in the oracle — identical nearest
     integers since 2-decimal money never lands on a .5 tie), the charge
     product price_c*(100-disc_c)*(100+tax_c) is a pure long multiply
-    in micros, and the sums run as hi/lo limb pairs (_Q1_LIMB) so the
-    whole per-row path stays in whole-stage-codegen primitives. The
+    in micros, and the sums run as hi/lo limb pairs
+    (intmoney.limb_sum_double) so the whole per-row path stays in
+    whole-stage-codegen primitives. The
     previous decimal(18,2/18,6) formulation kept compact-long Decimal
     sums but paid a per-row BigDecimal MULTIPLY chain for charge
     (Decimal.* always promotes); measured at the 100x point this
@@ -1262,15 +1252,7 @@ def q1_pricing_summary(spark, sf_dir):
         (price_c * (F.lit(100) - disc_c) * (F.lit(100) + tax_c))
         .alias("charge_u"))
 
-    def limb_sum(col: str, scale: float):
-        # x = (x div L)*L + (x % L) holds for any long in Spark
-        # (truncating div, sign-of-dividend remainder), so the pair of
-        # long sums recombines to the exact integer total in decimal.
-        hi = F.sum(F.expr(f"{col} div {_Q1_LIMB}"))
-        lo = F.sum(F.col(col) % _Q1_LIMB)
-        return ((hi.cast("decimal(38,0)") * _Q1_LIMB + lo)
-                .cast("double") / F.lit(scale))
-
+    limb_sum = intmoney.limb_sum_double
     return (rows.groupBy("l_returnflag", "l_linestatus")
             .agg(limb_sum("qty_c", 100.0).alias("sum_qty"),
                  limb_sum("price_c", 100.0).alias("sum_base_price"),

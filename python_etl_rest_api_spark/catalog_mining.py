@@ -33,12 +33,10 @@ discipline:
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from . import artifacts
 from .catalog import _events, _t, query
 from .operators.twopass import ROW_COL, SUM_COL, global_prefix
 from .session import tune
@@ -471,32 +469,6 @@ def text_hashing_features(spark, sf_dir):
 # ---------------------------------------------------------------------
 
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-_JSON_WRITTEN: set[str] = set()
-
-
-_JSON_SCRATCH: dict[str, str] = {}
-
-
-def _json_scratch(sf_dir: str) -> str:
-    """Per-process scratch directory for the JSONL rewrite of one
-    corpus: an UNPREDICTABLE tempfile.mkdtemp path, created once per
-    (process, sf_dir) and cached in a module global so repeated runs
-    in one process overwrite a single directory instead of each
-    leaking a fresh events-sized JSONL. mkdtemp (0700, random suffix)
-    is what actually closes the multi-user /tmp hazards: any
-    DETERMINISTIC name — even one embedding uid+pid — is enumerable
-    and pre-creatable (symlink planting), and mode("overwrite") is
-    delete-then-rewrite, not atomic for a concurrent reader of a
-    shared path. Leakage is bounded to one directory per live process
-    per corpus, reaped with the OS tempdir; best-effort cleanup at
-    interpreter exit."""
-    if sf_dir not in _JSON_SCRATCH:
-        d = tempfile.mkdtemp(prefix="json_events_")
-        import atexit
-        import shutil as _sh
-        atexit.register(_sh.rmtree, d, True)
-        _JSON_SCRATCH[sf_dir] = os.path.join(d, "events_jsonl")
-    return _JSON_SCRATCH[sf_dir]
 
 
 @query("source_json_roundtrip", f"""
@@ -518,19 +490,21 @@ def source_json_roundtrip(spark, sf_dir):
     values, VARCHAR enums, and microsecond TIMESTAMPs bit-exactly:
     the format-parity guarantee for JSON landing zones. Completes the
     source matrix: CSV (A1), parquet (everywhere), ORC
-    (source_orc_roundtrip), JSONL (here)."""
-    e = _events(spark, sf_dir)
-    path = _json_scratch(sf_dir)
-    if path not in _JSON_WRITTEN:
-        (e.write.mode("overwrite")
-         .option("timestampFormat", _TS_FMT).json(path))
-        _JSON_WRITTEN.add(path)
+    (source_orc_roundtrip), JSONL (here). The rewrite is built once per
+    corpus in the build-once store (artifacts.py)."""
+
+    def build(path):
+        (_events(spark, sf_dir).write
+         .option("timestampFormat", _TS_FMT).json(f"{path}/events"))
+        return f"{path}/events"
+
+    jsonl = artifacts.build_once("jsonl_events", sf_dir, build)
     tune(spark)
     schema = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double, props string")
     j = (spark.read.schema(schema)
          .option("timestampFormat", _TS_FMT)
-         .json(path))
+         .json(jsonl))
     return (j.filter(F.col("event_type").isNotNull())
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),

@@ -17,31 +17,17 @@ portable hashing, identical IEEE expression trees on both sides.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from . import artifacts
 from .catalog import _events, _t, query
 from .catalog_ext import _COSINE_PAIR_SQL, _SRP_ORACLE_SQL
 from .functions import intmoney
 from .operators import similarity, twopass
-from .session import broadcast_factscale, widen_scan
-
-# layout_bucketed_join's once-per-(process, corpus) bucketed layout:
-# sf_dir -> (orders_table, customers_table). Guarded for concurrent
-# catalog callers (REST threadpool); see the entry's docstring.
-import threading  # noqa: E402
-
-# sf_dir -> ((orders_table, customers_table), on-disk layout dir); the
-# dir rides along so a dangling-catalog rebuild can delete the orphaned
-# layout instead of leaking one per session restart (ADVICE r12)
-_BKT_CACHE: dict[str, tuple[tuple[str, str], str]] = {}
-_BKT_LOCK = threading.Lock()
-# suffix source for the bucketed-table names: monotonic per process so
-# rebuilt layouts (post-session-restart) can never reuse a name another
-# corpus's live tables hold
-import itertools  # noqa: E402
-
-_BKT_SEQ = itertools.count()
+from .session import broadcast_factscale, tune, widen_scan
 
 # ---------------------------------------------------------------------
 # TPC-H-profile headliners
@@ -743,16 +729,11 @@ def layout_bucketed_join(spark, sf_dir):
     oracle is the plain relational join - bucketing must not change a
     single value, only the plan.
 
-    The bucketed layout is built ONCE PER (process, corpus) and reused
-    across invocations - the same amortization contract as
-    catalog_iter's incremental band index: "paid once per table, not
-    once per query" is the entry's own claim, so repeat invocations
-    (bench reps, sweep re-runs) measure the zero-shuffle QUERY, and
-    only the first invocation pays the one-time layout write. The
-    testdata corpus is immutable, so a cached layout can never go
-    stale within a process."""
+    The bucketed layout is built once per corpus in the build-once
+    store (artifacts.py), so repeat invocations measure the
+    zero-shuffle query and only the first pays the layout write."""
     names = ensure_bucketed_layout(spark, sf_dir)
-    bo = spark.table(names[0])
+    bo = tune(spark).table(names[0])
     bc = spark.table(names[1])
     return (bo.hint("merge")
             .join(bc, bo.o_custkey == bc.c_custkey)
@@ -762,100 +743,41 @@ def layout_bucketed_join(spark, sf_dir):
                  .cast("double").alias("total_spend")))
 
 
+def _bucketed_names(path: str) -> tuple[str, str]:
+    # named after the layout's own mkdtemp directory: unique among live
+    # layouts, so a rebuild never reuses a name another corpus holds
+    tag = os.path.basename(path)
+    return f"{tag}_orders", f"{tag}_customers"
+
+
 def ensure_bucketed_layout(spark, sf_dir) -> tuple[str, str]:
-    """Build (or fetch) the per-(process, corpus) bucketed layout the
-    layout_bucketed_join entry serves from; returns the two table
-    names. Factored out of the entry (r13) so the bench can time the
-    one-time layout write separately from the zero-shuffle serve path
-    (the r12 verdict's build-vs-serve split) — behavior is unchanged."""
-    import tempfile
+    """The two table names of this corpus' bucketed layout: EXTERNAL
+    bucketed parquet tables under the store's directory (a managed
+    table would land in spark.sql.warehouse.dir, the session's CWD).
+    The registrations live in the session's in-memory catalog, so a
+    layout whose tables are gone (session restart, DROP TABLE) is
+    dropped and rebuilt."""
 
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    # EXTERNAL bucketed tables at an explicit fresh temp location:
-    # managed tables would land in spark.sql.warehouse.dir, which
-    # defaults to the session's CWD (not guaranteed writable under the
-    # grading driver), and a stale location from a prior session makes
-    # saveAsTable refuse. A fresh mkdtemp per build sidesteps both;
-    # table NAMES are unique per corpus so concurrent entries against
-    # different sf_dirs never collide.
-    with _BKT_LOCK:
-        cached = _BKT_CACHE.get(sf_dir)
-        names = cached[0] if cached else None
-        if names is not None and not all(
-                spark.catalog.tableExists(t) for t in names):
-            # saveAsTable registrations live in the SESSION's in-memory
-            # catalog: if the session was stopped and recreated in this
-            # process, the cached names dangle (ADVICE r11; BOTH names
-            # checked — a partial registration must also rebuild,
-            # ADVICE r12) — rebuild, after best-effort dropping the
-            # stale registrations and deleting the prior layout's
-            # on-disk directory so repeated restarts in one process
-            # cannot leak one orphaned layout per rebuild (ADVICE r12).
-            import shutil
-            for t in names:
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS {t}")
-                except Exception:
-                    pass
-            shutil.rmtree(cached[1], ignore_errors=True)
-            names = None
-        if names is None:
-            # monotonic counter, NOT len(_BKT_CACHE): after a session
-            # restart two corpora rebuild by OVERWRITING their slots,
-            # so a len-based suffix would hand both the same table
-            # names and one corpus would silently read the other's
-            # data (r12 review finding).
-            suffix = f"{next(_BKT_SEQ)}"
-            names = (f"r5_bkt_orders_{suffix}", f"r5_bkt_customers_{suffix}")
-            loc = tempfile.mkdtemp(prefix="r5_bkt_")
-            for t in names:
-                spark.sql(f"DROP TABLE IF EXISTS {t}")
-            try:
-                (orders.write.format("parquet")
-                 .option("path", f"{loc}/orders")
-                 .bucketBy(8, "o_custkey").sortBy("o_custkey")
-                 .saveAsTable(names[0]))
-                (cust.write.format("parquet")
-                 .option("path", f"{loc}/customers")
-                 .bucketBy(8, "c_custkey").sortBy("c_custkey")
-                 .saveAsTable(names[1]))
-            except BaseException:
-                # failure-path hygiene (ADVICE r13 #3): a throw between
-                # the two writes would otherwise leave the first table
-                # registered and the fresh mkdtemp orphaned — the exact
-                # leak the restart path above cleans, minus the cache
-                # slot that lets it find the residue. Drop whatever was
-                # created and remove the directory before re-raising.
-                import shutil
-                for t in names:
-                    try:
-                        spark.sql(f"DROP TABLE IF EXISTS {t}")
-                    except Exception:
-                        pass
-                shutil.rmtree(loc, ignore_errors=True)
-                raise
-            _BKT_CACHE[sf_dir] = (names, loc)
-    return names
+    def build(path):
+        orders, cust = _bucketed_names(path)
+        (_t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+         .write.format("parquet").option("path", f"{path}/orders")
+         .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(orders))
+        (_t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+         .write.format("parquet").option("path", f"{path}/customers")
+         .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(cust))
+        return orders, cust
 
+    def valid(path):
+        return all(spark.catalog.tableExists(t)
+                   for t in _bucketed_names(path))
 
-def reset_bucketed_layout(spark, sf_dir) -> None:
-    """Drop this corpus' bucketed layout (tables + on-disk directory)
-    and forget the cache slot, so the next ensure_bucketed_layout pays
-    a fresh build. Bench diagnostics only — the entry itself never
-    resets."""
-    import shutil
-    with _BKT_LOCK:
-        cached = _BKT_CACHE.pop(sf_dir, None)
-    if cached is None:
-        return
-    names, loc = cached
-    for t in names:
-        try:
+    def drop(path):
+        for t in _bucketed_names(path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-        except Exception:
-            pass
-    shutil.rmtree(loc, ignore_errors=True)
+
+    return artifacts.build_once("bucketed_layout", sf_dir, build,
+                                valid=valid, drop=drop)
 
 
 @query("ntile_customer_deciles", """

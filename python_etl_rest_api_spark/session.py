@@ -216,6 +216,23 @@ def broadcast_factscale(df):
     return F.broadcast(df)
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: half of physical memory (MemTotal),
+    in MiB. In local mode the executors run inside the driver JVM; the
+    other half is headroom for off-heap buffers, Python workers and the
+    OS, because on a host without swap a heap sized past physical memory
+    ends in a kernel OOM kill instead of a spill. 4g where meminfo is
+    unreadable."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "4g"
+
+
 def get_spark(app_name: str = "python_etl_rest_api_spark",
               cpus: str | None = None) -> SparkSession:
     """Build (or fetch) the engine session.
@@ -245,7 +262,8 @@ def get_spark(app_name: str = "python_etl_rest_api_spark",
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
